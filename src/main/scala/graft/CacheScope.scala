@@ -19,17 +19,21 @@ import org.apache.spark.storage.StorageLevel
   * Frames are persisted MEMORY_AND_DISK — at corpus scale, spilling a
   * reused intermediate beats recomputing it, and storage never OOMs the
   * executor.
+  *
+  * One scope, one boundary: every scope-lived memo entry goes through
+  * [[Memos]], and a release of a session evicts all of them. Session-lived
+  * state — the temp-view registration and the plan memo in [[Tables]] —
+  * survives a release.
   */
 object CacheScope {
-  private final case class Entry(session: SparkSession, df: DataFrame,
-      onRelease: () => Unit)
+  private final case class Entry(session: SparkSession, df: DataFrame)
   private val live = scala.collection.mutable.ArrayBuffer.empty[Entry]
 
   /** Session-churn guard (VERDICT r13 #3): registry entries hold STRONG
     * session + frame references — they must, or release could not
     * deterministically unpersist — so a caller that creates a session
     * per request and forgets [[release]] would grow this registry (and
-    * the memo tier wired to its callbacks) without bound. There is no
+    * the [[Memos]] tier evicted with it) without bound. There is no
     * session-closed signal to hook (child sessions are abandoned by
     * dropping references, and any weak-reference scheme is defeated by
     * the entry's own frame→session strong edge), so the guard is an
@@ -64,7 +68,6 @@ object CacheScope {
     scala.collection.mutable.LinkedHashMap.empty[SparkSession, Unit]
 
   /** Persist `df` and register it for the next [[release]] of its session.
-    * `onRelease` lets memoizing callers evict their lookup entry too.
     *
     * Idempotent on plan-identical frames: when a frame with the same
     * canonicalized plan is already cached (`df.storageLevel` does that
@@ -72,17 +75,17 @@ object CacheScope {
     * routinely retain a frame one of their building blocks already
     * retained (e.g. a pair miner's shingle index flowing into the
     * group-collapse queries), and re-persisting only emits a CacheManager
-    * "already cached" WARN per occurrence. The entry is still registered
-    * so `onRelease` callbacks fire at the scope boundary either way.
+    * "already cached" WARN per occurrence. The entry is still registered,
+    * so the session still holds a live scope for the high-water guard.
     */
-  def retain(df: DataFrame, onRelease: () => Unit = () => ()): DataFrame =
+  def retain(df: DataFrame): DataFrame =
     synchronized {
       val cached =
         if (df.storageLevel == StorageLevel.NONE)
           df.persist(StorageLevel.MEMORY_AND_DISK)
         else df
       val sess = df.sparkSession
-      live += Entry(sess, cached, onRelease)
+      live += Entry(sess, cached)
       touch.remove(sess)
       touch.put(sess, ())
       var victim = // head = least-recently-retaining; never the current one
@@ -130,7 +133,7 @@ object CacheScope {
       : Option[(DataFrame, DataFrame) => Boolean] = None
 
   /** Unpersist (blocking, so storage-empty assertions are deterministic)
-    * every frame registered under `s` and run the eviction callbacks.
+    * every frame registered under `s` and evict its [[Memos]] entries.
     *
     * Plan-identical frames are REFERENCE-COUNTED across sessions (r13,
     * found by the sf0.01 whole-surface concurrency soak): Spark's
@@ -190,7 +193,7 @@ object CacheScope {
         }
       if (!sharedElsewhere)
         try e.df.unpersist(blocking = true) catch { case _: Throwable => () }
-      e.onRelease()
     }
+    Memos.evict(s)
   }
 }

@@ -36,7 +36,7 @@ package graft
   *   ~400k initial partitions, AQE coalescing takes it from there —
   *   tile-count consumers stay bounded separately via
   *   [[graft.ops.TiledScan.defaultTiles]]);
-  * - unknown size (non-local path, no listing): core count — the
+  * - unknown size (unresolvable path or empty dir): core count — the
   *   pre-r15 status quo, never worse.
   *
   * `SPARK_GRAFT_SHUFFLE_PARTITIONS` overrides for cluster profiles
@@ -49,7 +49,8 @@ object SessionTuning {
   def shufflePartitions(sfDir: String, cpus: Int): Int =
     sys.env.get("SPARK_GRAFT_SHUFFLE_PARTITIONS")
       .flatMap(_.toIntOption).getOrElse {
-      val bytes = dirBytes(new java.io.File(sfDir))
+      val bytes = Tables.contentBytes(sfDir,
+        new org.apache.hadoop.conf.Configuration()).getOrElse(0L)
       if (bytes <= 0) cpus
       else {
         val fine = (bytes + FineChunk - 1) / FineChunk
@@ -57,8 +58,4 @@ object SessionTuning {
         math.max(1L, math.min(fine, cap)).toInt
       }
     }
-
-  private def dirBytes(f: java.io.File): Long =
-    if (f.isFile) f.length()
-    else Option(f.listFiles()).map(_.map(dirBytes).sum).getOrElse(0L)
 }

@@ -30,27 +30,36 @@ object Tables {
     */
   private val MaxPlanMemo = 64
   private val planMemo =
-    new java.util.LinkedHashMap[(SparkSession, String, Long, Int, String),
-        DataFrame](16, 0.75f, true) {
+    new java.util.LinkedHashMap[(SparkSession, PlanKey), DataFrame](
+        16, 0.75f, true) {
       override def removeEldestEntry(
-          e: java.util.Map.Entry[(SparkSession, String, Long, Int, String),
-            DataFrame]): Boolean = size > MaxPlanMemo
+          e: java.util.Map.Entry[(SparkSession, PlanKey), DataFrame])
+          : Boolean = size > MaxPlanMemo
     }
 
-  /** Effective spread configuration (part of the plan-memo key, r15: the
-    * spread width is baked into the built plan, so a session retuning
+  /** Everything a built table frame depends on besides the session: the
+    * path and its mtime stamp, the configured embedding dim (`embeddings`
+    * only) and the effective spread configuration (r15: the spread width
+    * is baked into the built plan, so a session retuning
     * `spark.graft.spread.*` must miss the memo, not serve a stale width).
     */
-  private def spreadConf(spark: SparkSession): String =
-    spark.conf.getOption("spark.graft.spread.chunkBytes").getOrElse("") + "|" +
-      spark.conf.getOption("spark.graft.spread.weights").getOrElse("")
+  private final case class PlanKey(path: String, stamp: Long, dim: Int,
+      spread: (Option[String], Option[String]))
+
+  private def planKey(spark: SparkSession, sfDir: String,
+      name: String): PlanKey = {
+    val path = s"$sfDir/$name.parquet"
+    PlanKey(path, pathStamp(spark, path),
+      if (name == "embeddings") embeddingDim(spark) else 0,
+      (spark.conf.getOption("spark.graft.spread.chunkBytes"),
+        spark.conf.getOption("spark.graft.spread.weights")))
+  }
 
   /** Test hook: current plan-memo population (bounded-by-construction). */
   private[graft] def planMemoSize: Int =
     planMemo.synchronized { planMemo.size }
 
   def apply(spark: SparkSession, sfDir: String, name: String): DataFrame = {
-    val path = s"$sfDir/$name.parquet"
     // The NTZ→TimestampType cast below interprets wall-clock micros in the
     // session timezone; oracle equivalence (DuckDB reads NTZ as naive UTC)
     // requires UTC. Every shipped entry point already sets it — pin it here
@@ -60,10 +69,9 @@ object Tables {
     // timezone at EXECUTION time, not at plan-build time.
     if (spark.conf.get("spark.sql.session.timeZone") != "UTC")
       spark.conf.set("spark.sql.session.timeZone", "UTC")
-    val memoKey = (spark, path, pathStamp(spark, path),
-      if (name == "embeddings") embeddingDim(spark) else 0,
-      spreadConf(spark))
-    val hit = planMemo.synchronized { planMemo.get(memoKey) }
+    val key = planKey(spark, sfDir, name)
+    val path = key.path
+    val hit = planMemo.synchronized { planMemo.get((spark, key)) }
     if (hit != null) return hit
     val raw = if (name == "events") {
       // events.ts has shipped as parquet TIMESTAMP(NANOS) in some driver
@@ -107,7 +115,7 @@ object Tables {
             org.apache.spark.sql.functions.col("embedding")) === dim)
     } else spark.read.parquet(path)
     val built = maybeParallelize(spark, raw, path)
-    planMemo.synchronized { planMemo.put(memoKey, built) }
+    planMemo.synchronized { planMemo.put((spark, key), built) }
     built
   }
 
@@ -181,6 +189,19 @@ object Tables {
     try p.getFileSystem(spark.sparkContext.hadoopConfiguration)
       .getFileStatus(p).getModificationTime
     catch { case _: java.io.IOException => 0L }
+  }
+
+  /** Total content length under `path` (file or directory), sized
+    * through the Hadoop FileSystem so hdfs://, s3a:// and file:// paths
+    * report their true length — java.io.File returns 0 for those. None
+    * when the path cannot be resolved; each caller picks its own
+    * fallback.
+    */
+  private[graft] def contentBytes(path: String,
+      conf: org.apache.hadoop.conf.Configuration): Option[Long] = {
+    val p = new org.apache.hadoop.fs.Path(path)
+    try Some(p.getFileSystem(conf).getContentSummary(p).getLength)
+    catch { case _: java.io.IOException => None }
   }
 
   /** The driver testdata ships ONE row group per file, so a bare scan is
@@ -259,19 +280,13 @@ object Tables {
 
   private def maybeParallelize(spark: SparkSession, df: DataFrame,
       path: String): DataFrame = {
-    // Size through the Hadoop FileSystem so hdfs:// and s3a:// paths (and
-    // directory-style parquet) report true content length — java.io.File
-    // returns 0/4K for those, which would force the repartition exactly
-    // where it must not happen. Unresolvable path → Long.MaxValue: the
-    // scan will fail with its own error, without adding a shuffle here.
-    // Keyed by (path, mtime stamp) so an in-place rewrite invalidates
-    // the memo (review r13) while repeat loads stay one cheap RPC.
-    val bytes = sizeCache.getOrElseUpdate((path, pathStamp(spark, path)), {
-      val p = new org.apache.hadoop.fs.Path(path)
-      try p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-        .getContentSummary(p).getLength
-      catch { case _: java.io.IOException => Long.MaxValue }
-    })
+    // Unresolvable path → Long.MaxValue: the scan will fail with its own
+    // error, without adding a shuffle here. Keyed by (path, mtime stamp)
+    // so an in-place rewrite invalidates the memo while
+    // repeat loads stay one cheap RPC.
+    val bytes = sizeCache.getOrElseUpdate((path, pathStamp(spark, path)),
+      contentBytes(path, spark.sparkContext.hadoopConfiguration)
+        .getOrElse(Long.MaxValue))
     if (bytes < 32L * 1024 * 1024) {
       import org.apache.spark.sql.functions.{col, xxhash64}
       val name = path.split('/').last.stripSuffix(".parquet")
@@ -295,37 +310,40 @@ object Tables {
     * functions (rolling_hash, cosine_sim, …) on the session.
     */
   def registerAll(spark: SparkSession, sfDir: String): Unit = {
+    val key = viewsKey(spark, sfDir)
     all.foreach(n => apply(spark, sfDir, n).createOrReplaceTempView(n))
     graft.GraftExtensions.register(spark)
-    registeredDir.synchronized {
-      registeredDir.put(spark, sfDir + " " + spreadConf(spark))
-    }
+    registered.synchronized { registered.put(spark, key) }
   }
 
+  /** The registered views were built from exactly these plan-memo keys:
+    * the same key means the same frames, so re-registering would change
+    * nothing. Computed before registering, so a rewrite that lands
+    * mid-registration re-registers on the next call.
+    */
+  private def viewsKey(spark: SparkSession, sfDir: String): Seq[PlanKey] =
+    all.map(planKey(spark, sfDir, _))
+
+  // Session-lived, like the temp views themselves (not CacheScope-lived).
   // Weak-keyed (ADVICE r3): a strong SparkSession key would pin every
   // session a long-lived multi-session service ever registered. Access is
   // synchronized on the map — WeakHashMap is not thread-safe.
-  private val registeredDir =
-    new java.util.WeakHashMap[SparkSession, String]()
+  private val registered =
+    new java.util.WeakHashMap[SparkSession, Seq[PlanKey]]()
 
-  /** Once-per-session view registration — `registerAll` is idempotent but
-    * re-resolves ten parquet footers per call, which the q_sql_* queries
-    * would otherwise pay on every execution. Tracks the CURRENT dir per
-    * session (not a seen-set) plus the spread conf the views were built
-    * under (r15: the spread width is baked into the registered plans, so
-    * a session retuning `spark.graft.spread.*` — the width-sweep probe —
-    * must re-register, not serve stale-width views): switching either
-    * re-registers, so views always reflect the most recent call. A
-    * sentinel `tableExists` probe catches a caller dropping the temp
-    * views out from under the memo (registration is then redone, not
-    * skipped).
+  /** Once-per-session view registration — `registerAll` re-resolves ten
+    * parquet footers and re-registers the native functions, which the
+    * q_sql_* queries would otherwise pay on every execution. Re-registers
+    * when the views would differ: another dir, a rewritten table, a new
+    * embedding dim or spread conf (the width-sweep probe retunes
+    * `spark.graft.spread.*`), or a temp view dropped out from under the
+    * memo.
     */
   def ensureRegistered(spark: SparkSession, sfDir: String): Unit = {
-    val hit = registeredDir.synchronized {
-      Option(registeredDir.get(spark))
-        .contains(sfDir + " " + spreadConf(spark))
-    }
-    if (!hit || !spark.catalog.tableExists(all.head)) registerAll(spark, sfDir)
+    val key = viewsKey(spark, sfDir)
+    val hit = registered.synchronized { registered.get(spark) == key }
+    if (!hit || !all.forall(spark.catalog.tableExists))
+      registerAll(spark, sfDir)
   }
 
   /** S7: driver-rows→frame adapter (reference data_loader.py:232-265 —

@@ -31,23 +31,20 @@ object VectorQueries extends QueryPack {
     * query boundaries, so ReusedExchange could never dedupe it in-plan.
     * Columns: doc_id, r_dense, r_bm25, rrf; ≤20 rows.
     */
-  private val fusedCache =
-    graft.Memos.register(scala.collection.concurrent.TrieMap.empty[(SparkSession, String), DataFrame])
+  private val fusedMemo =
+    graft.Memos.scoped[String, DataFrame]("vector.fusedTop20")
 
   private def fusedTop20(s: SparkSession, dir: String): DataFrame =
-    fusedCache.getOrElseUpdate((s, dir),
-      graft.CacheScope.retain(buildFusedTop20(s, dir),
-        onRelease = () => fusedCache.remove((s, dir))))
+    fusedMemo(s, dir)(graft.CacheScope.retain(buildFusedTop20(s, dir)))
 
   /** Memoized q_e_mmr_topk result per (session, dir): the unrolled
     * greedy plan is ~25 operators deep with per-round cached unions, so
     * a REBUILD pays ~2 s of re-analysis/canonicalization just to
     * rediscover the cache (measured, r10) — handing back the same
     * materialized 5-row frame is the fusedTop20 discipline applied to
-    * the selection cascade. Evicted by CacheScope.release.
+    * the selection cascade.
     */
-  private val mmrCache =
-    graft.Memos.register(scala.collection.concurrent.TrieMap.empty[(SparkSession, String), DataFrame])
+  private val mmrMemo = graft.Memos.scoped[String, DataFrame]("vector.mmr")
 
   /** Hybrid retrieval: reciprocal-rank fusion (Cormack et al., k=60) of a
     * sparse BM25 leg and a dense cosine leg — the standard RAG first-stage
@@ -1773,7 +1770,7 @@ object VectorQueries extends QueryPack {
         // and materializes once here; 9 jobs after. The one corpus-sized
         // step (the shortlist's cosine pass + heaps) is a single scan
         // with no runtime re-planning decisions to lose.
-        mmrCache.getOrElseUpdate((s, dir),
+        mmrMemo(s, dir)(
         graft.ops.IterScope.noAqe(s) {
         val q = broadcast(queryVec(s, dir).select(col("embedding").as("qv")))
         val short = graft.CacheScope.retain(
@@ -1807,8 +1804,7 @@ object VectorQueries extends QueryPack {
             .withColumn("pick_order", lit(i))
           sel = graft.CacheScope.retain(sel.union(pick))
         }
-        val res = graft.CacheScope.retain(sel.orderBy("pick_order"),
-          onRelease = () => mmrCache.remove((s, dir)))
+        val res = graft.CacheScope.retain(sel.orderBy("pick_order"))
         res.count()
         res
         })

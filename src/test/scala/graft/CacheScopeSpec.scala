@@ -11,34 +11,39 @@ import org.scalatest.funsuite.AnyFunSuite
 class CacheScopeSpec extends AnyFunSuite {
   private lazy val spark = SparkSpec.session
   import spark.implicits._
+  import CacheScopeSpec.memo
 
-  test("retain caches, release unpersists everything and runs eviction callbacks") {
-    var evicted = false
-    val df = CacheScope.retain(
-      Seq(1, 2, 3).toDF("x"), onRelease = () => evicted = true)
+  test("retain caches, release unpersists everything and evicts the " +
+    "session's memo entries") {
+    CacheScope.release(spark)
+    val df = memo(spark, "release")(CacheScope.retain(Seq(1, 2, 3).toDF("x")))
     df.count()
     assert(df.storageLevel.useMemory || df.storageLevel.useDisk)
+    val evictions = memo.stats.evictions
     CacheScope.release(spark)
-    assert(evicted)
+    assert(memo.stats.evictions == evictions + 1)
+    assert(memo.stats.entries == 0)
     assert(df.storageLevel == org.apache.spark.storage.StorageLevel.NONE)
   }
 
   test("retain is idempotent on plan-identical frames: no double-persist, " +
-    "both eviction callbacks still fire on release") {
-    var evictions = 0
-    val base = Seq(1, 2, 3).toDF("x")
-    val first = CacheScope.retain(base, onRelease = () => evictions += 1)
+    "both retains still register and release evicts both memo entries") {
+    CacheScope.release(spark)
+    val first = memo(spark, "first")(CacheScope.retain(Seq(1, 2, 3).toDF("x")))
     first.count()
     val persistedBefore = spark.sparkContext.getPersistentRDDs.keySet
     // same canonicalized plan: must NOT create a second cache entry (the
     // CacheManager would WARN "already cached" and ignore it anyway)
-    val again = CacheScope.retain(
-      Seq(1, 2, 3).toDF("x"), onRelease = () => evictions += 1)
+    val again = memo(spark, "again")(CacheScope.retain(Seq(1, 2, 3).toDF("x")))
     again.count()
     assert(spark.sparkContext.getPersistentRDDs.keySet == persistedBefore,
       "plan-identical retain must not add a cache entry")
+    assert(CacheScope.liveCount(spark) == 2,
+      "a plan-identical retain still registers")
+    val evictions = memo.stats.evictions
     CacheScope.release(spark)
-    assert(evictions == 2, "every registrant's callback fires on release")
+    assert(memo.stats.evictions == evictions + 2)
+    assert(CacheScope.liveCount(spark) == 0)
     assert(first.storageLevel == org.apache.spark.storage.StorageLevel.NONE)
   }
 
@@ -103,7 +108,6 @@ class CacheScopeSpec extends AnyFunSuite {
     "(churn guard, r14 #3)") {
     val saved = CacheScope.maxSessions
     val sessions = (1 to 5).map(_ => spark.newSession())
-    val evicted = scala.collection.mutable.Set.empty[Int]
     try {
       CacheScope.maxSessions = 3
       val auto0 = CacheScope.autoReleases.get()
@@ -112,15 +116,20 @@ class CacheScopeSpec extends AnyFunSuite {
         import sq.implicits._
         // plan-distinct per session (distinct literal count) so refcount
         // sharing can't mask the eviction
-        val f = CacheScope.retain((1 to (100 + i)).toDF("x"),
-          onRelease = () => evicted += i)
+        val f = memo(s, "hw")(CacheScope.retain((1 to (100 + i)).toDF("x")))
         f.count()
         f
       }
       assert(CacheScope.sessionCount <= 3, "cap must hold")
       assert(CacheScope.autoReleases.get() == auto0 + 2,
         "two oldest scopes auto-released")
-      assert(evicted == Set(0, 1), s"oldest-first victims, got $evicted")
+      // a memo miss means the session's entry was evicted
+      val evicted = sessions.indices.filter { i =>
+        var rebuilt = false
+        memo(sessions(i), "hw") { rebuilt = true; frames(i) }
+        rebuilt
+      }
+      assert(evicted == Seq(0, 1), s"oldest-first victims, got $evicted")
       assert(frames(0).storageLevel ==
         org.apache.spark.storage.StorageLevel.NONE,
         "evicted scope's frame must be unpersisted")
@@ -153,4 +162,9 @@ class CacheScopeSpec extends AnyFunSuite {
     CacheScope.release(spark)
     assert((spark.sparkContext.getPersistentRDDs.keySet -- baseline).isEmpty)
   }
+}
+
+object CacheScopeSpec {
+  private val memo =
+    Memos.scoped[String, org.apache.spark.sql.DataFrame]("test.cacheScope")
 }

@@ -7,7 +7,9 @@ import org.scalatest.funsuite.AnyFunSuite
   * the first, the memo tier grows while the scope is live and is FULLY
   * evicted by [[CacheScope.release]] (the ChurnProbe boundedness
   * invariant), and a rebuilt entry after release still reproduces the
-  * same results — eviction is a recompute, never a wrong answer.
+  * same results — eviction is a recompute, never a wrong answer. Also
+  * pins the [[Memos]] eviction rule itself: the counters, and a release
+  * that lands during a build.
   */
 class OpMemoSpec extends AnyFunSuite {
   private lazy val spark = SparkSpec.session
@@ -58,4 +60,40 @@ class OpMemoSpec extends AnyFunSuite {
     assert(cal1 === cal2)
     CacheScope.release(spark)
   }
+
+  test("memo counters: a repeat in scope hits, release evicts to base") {
+    CacheScope.release(spark)
+    val base = Memos.totalEntries
+    def finals = Memos.stats("indicator.finals")
+    run("q_w7_rsi_final")
+    val afterFirst = finals
+    assert(afterFirst.entries === 1)
+    run("q_w8_macd_final") // the trio shares one finals build
+    assert(finals.hits === afterFirst.hits + 1)
+    assert(finals.misses === afterFirst.misses)
+    CacheScope.release(spark)
+    assert(finals.evictions === afterFirst.evictions + 1)
+    assert(finals.entries === 0)
+    assert(Memos.totalEntries === base)
+  }
+
+  test("a build that releases its own session mid-build leaves no entry") {
+    CacheScope.release(spark)
+    val base = Memos.totalEntries
+    val evictions = OpMemoSpec.memo.stats.evictions
+    val v = OpMemoSpec.memo(spark, "k") { CacheScope.release(spark); 42 }
+    assert(v === 42, "the caller still gets the built value")
+    assert(OpMemoSpec.memo.stats.entries === 0)
+    assert(OpMemoSpec.memo.stats.evictions === evictions + 1)
+    assert(Memos.totalEntries === base)
+    // the next call in the new scope builds and keeps its entry
+    assert(OpMemoSpec.memo(spark, "k")(7) === 7)
+    assert(OpMemoSpec.memo.stats.entries === 1)
+    CacheScope.release(spark)
+    assert(OpMemoSpec.memo.stats.entries === 0)
+  }
+}
+
+object OpMemoSpec {
+  private val memo = Memos.scoped[String, Int]("test.opMemo")
 }

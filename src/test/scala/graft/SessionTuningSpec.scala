@@ -44,4 +44,14 @@ class SessionTuningSpec extends AnyFunSuite {
     assert(small >= 1)
     assert(SessionTuning.shufflePartitions("/no/such/dir", 32) === 32)
   }
+
+  test("a file:// URI sizes like its plain path (Hadoop FileSystem sizing)") {
+    val d = java.nio.file.Files.createTempDirectory("stune_uri").toFile
+    d.deleteOnExit()
+    val f = new java.io.RandomAccessFile(new java.io.File(d, "x.parquet"), "rw")
+    try f.setLength(10L * 1024 * 1024) finally f.close()
+    val plain = SessionTuning.shufflePartitions(d.getAbsolutePath, 32)
+    assert(plain === 5, "10 MiB / 2 MiB chunks")
+    assert(SessionTuning.shufflePartitions(d.toURI.toString, 32) === plain)
+  }
 }

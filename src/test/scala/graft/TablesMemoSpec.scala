@@ -66,4 +66,68 @@ class TablesMemoSpec extends AnyFunSuite {
     assert(Tables.planMemoSize <= 64,
       s"plan memo must stay bounded, got ${Tables.planMemoSize}")
   }
+
+  test("view registration: a repeat is a no-op; a new dir, spread conf, " +
+    "dropped view or rewritten table re-registers") {
+    val s = spark.newSession()
+    // a minimal ten-table corpus: the columns Tables.apply inspects
+    def corpus(): java.io.File = {
+      val d = java.nio.file.Files.createTempDirectory("tviews").toFile
+      d.deleteOnExit()
+      Tables.all.foreach { n =>
+        val cols = n match {
+          case "events" => Seq("id AS event_id", "timestamp'2024-01-01' AS ts")
+          case "embeddings" => Seq("id AS vec_id",
+            "array_repeat(CAST(1.0 AS FLOAT), 64) AS embedding")
+          case _ => Seq("id")
+        }
+        s.range(2).selectExpr(cols: _*).write.parquet(s"$d/$n.parquet")
+      }
+      d
+    }
+    val dir = corpus()
+    val sf = dir.getAbsolutePath
+    // sentinels installed over a registered view and native function:
+    // re-registration replaces them, a no-op leaves them in place
+    def plant(): Unit = {
+      s.range(1).toDF("sentinel").createOrReplaceTempView("region")
+      s.udf.register("cosine_sim", (_: Seq[Double], _: Seq[Double]) => -42.0)
+    }
+    def planted: Boolean =
+      s.table("region").columns.toSeq == Seq("sentinel") &&
+        s.sql("SELECT cosine_sim(array(1d), array(1d))").head().getDouble(0) == -42.0
+    def reRegisters(change: => Unit): Boolean = {
+      plant(); change; !planted
+    }
+
+    Tables.ensureRegistered(s, sf)
+    assert(!reRegisters(Tables.ensureRegistered(s, sf)),
+      "a second ensureRegistered must not re-register")
+    assert(reRegisters(Tables.ensureRegistered(s, corpus().getAbsolutePath)),
+      "a new sfDir must re-register")
+    assert(reRegisters(Tables.ensureRegistered(s, sf)))
+    s.conf.set("spark.graft.spread.chunkBytes", "65536")
+    try assert(reRegisters(Tables.ensureRegistered(s, sf)),
+      "a new spread conf must re-register")
+    finally s.conf.unset("spark.graft.spread.chunkBytes")
+    assert(reRegisters(Tables.ensureRegistered(s, sf)))
+    assert(reRegisters {
+      s.catalog.dropTempView("lineitem")
+      Tables.ensureRegistered(s, sf)
+    }, "a dropped view must re-register")
+    assert(s.table("lineitem").count() > 0)
+
+    // in-place rewrite (the plan-memo pattern above): views must not go stale
+    val p = new java.io.File(dir, "region.parquet")
+    val before = s.table("region").count()
+    Thread.sleep(1100)
+    val tmp = new java.io.File(dir, "region2.parquet").getAbsolutePath
+    s.range(before + 3).write.parquet(tmp)
+    new scala.reflect.io.Directory(p).deleteRecursively()
+    assert(new java.io.File(tmp).renameTo(p))
+    p.setLastModified(System.currentTimeMillis())
+    Tables.ensureRegistered(s, sf)
+    assert(s.table("region").count() === before + 3,
+      "a rewritten table must re-register its view")
+  }
 }
